@@ -28,8 +28,13 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * Window-fire semantics: the reference's processing-time windows emit once
   * per minute at window close (`Main.java:137,154`). Here the count queries
   * put a 0-delay watermark on the ingest-stamped `procTime` column and run
-  * in Append mode, so each (window, key) count is emitted exactly once,
-  * when the window closes — not as running partials.
+  * in Append mode, so each (window, key) count is emitted at most once, as
+  * a final total rather than as running partials — but only when a later
+  * micro-batch moves the watermark past the window's end. Once input stops
+  * no batch runs, so the last window is never written: draining a finite
+  * input through `startAll` leaves its newest window out of both count
+  * sinks. `startAllShared` merges each batch's partial counts as they
+  * arrive and has no such gap.
   */
 final class Pipeline(
     source: IngestSource,
@@ -140,6 +145,12 @@ final class Pipeline(
     * at large scale; `startAll` remains the contract-faithful literal
     * translation of the reference's three independent sinks.
     *
+    * Per micro-batch (`fanOut`): the batch is persisted and materialised by
+    * one action, so J1 — its state load and RocksDB commit included — runs
+    * exactly once, and the emptiness test reads that action's row count.
+    * The three sink writes then run concurrently on the cached batch, and
+    * all of them complete or fail before the batch is released.
+    *
     * Fan-out semantics inside each batch:
     *  - userAddress docs: LWW upsert by userId — identical to `startAll`
     *    and naturally idempotent under batch replay;
@@ -152,9 +163,12 @@ final class Pipeline(
     *    contract, SURVEY §2.2). Late partials for an already-superseded
     *    window are dropped, matching the 0-delay watermark in `startAll`.
     *
-    * Additive merge is not idempotent, so batch replay is fenced with a
-    * high-water-mark marker file per batch id (written after the merges
-    * commit). A Mongo/Delta sink would record the batch id inside the same
+    * Additive merge is not idempotent, so batch replay is fenced per count
+    * sink: a marker file `<batchId>.<key>` is written after that sink's
+    * merge commits, so a retry after one write failed never re-applies the
+    * other sink's merge. A bare `<batchId>` marker (one marker for both
+    * merges, as earlier versions wrote it) counts as both merges done. A
+    * Mongo/Delta sink would record the batch id inside the same
     * transaction as the merge; the marker file is the local stand-in and
     * leaves only the crash-between-merge-and-marker window, which a
     * transactional sink closes.
@@ -168,34 +182,49 @@ final class Pipeline(
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", s"$checkpointDir/shared")
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val marker = markerDir.resolve(batchId.toString)
-          val alreadyMerged = java.nio.file.Files.exists(marker)
-          batch.persist()
-          try {
-            userAddressSink.upsert(
-              withSnapshotOrder(Projections.userAddressDocument(batch)),
-              "userId", orderCol = Some("snap_order"))
-            if (!alreadyMerged) {
-              mergeWindowCounts(batch, byState = true)
-              mergeWindowCounts(batch, byState = false)
-              java.nio.file.Files.createFile(marker)
-            }
-          } finally batch.unpersist()
-        }
-        ()
-      }
+      .foreachBatch { (batch: DataFrame, batchId: Long) => fanOut(batch, batchId, markerDir) }
       .start()
+  }
+
+  /** One micro-batch of `startAllShared`: J1 evaluated once into the
+    * cache, then the three sink writes at once, each count merge behind its
+    * own replay marker in `markerDir`.
+    */
+  private[app] def fanOut(batch: DataFrame, batchId: Long,
+      markerDir: java.nio.file.Path): Unit = {
+    batch.persist()
+    try {
+      // the one J1 evaluation: every partition is cached before any sink
+      // job starts, so concurrent jobs never compute (and load the state
+      // store of) the same J1 partition twice
+      if (batch.count() > 0) {
+        def fenced(key: String)(merge: => Unit): () => Unit = () => {
+          val marker = markerDir.resolve(s"$batchId.$key")
+          val legacy = markerDir.resolve(batchId.toString)
+          if (!java.nio.file.Files.exists(marker) && !java.nio.file.Files.exists(legacy)) {
+            merge
+            java.nio.file.Files.createFile(marker)
+          }
+        }
+        Pipeline.runConcurrently(Seq(
+          () => userAddressSink.upsert(
+            withSnapshotOrder(Projections.userAddressDocument(batch)),
+            "userId", orderCol = Some("snap_order")),
+          fenced("state")(mergeWindowCounts(batch, byState = true)),
+          fenced("country")(mergeWindowCounts(batch, byState = false))))
+      }
+    } finally batch.unpersist()
   }
 
   /** Accumulate one batch's partial window counts into a count sink:
     * union the sink's current (window_start, key, count) rows with the
     * batch partials, sum per (window, key), and upsert — the per-key LWW
     * by window_start inside `upsert` keeps the newest window's total.
-    * The count table is tiny (one row per distinct key), so the
-    * read-merge-write is the same copy-on-write shape the sink already
-    * takes per batch.
+    * The partial is collected: its size is bounded by the windows in the
+    * batch times the key cardinality, not by the input volume, and holding
+    * it on the driver computes it once. The count table is tiny (one row
+    * per distinct key), so the read-merge-write is the same copy-on-write
+    * shape the sink already takes per batch.
     */
   private def mergeWindowCounts(batch: DataFrame, byState: Boolean): Unit = {
     import org.apache.spark.sql.functions.{col, sum}
@@ -204,9 +233,11 @@ final class Pipeline(
       else WindowCounts.countByCountry(batch, windowLength = windowLength)
     val (sink, key) =
       if (byState) (stateCountSink, "state") else (countryCountSink, "country")
-    if (!partial.isEmpty) {
-      val all = sink.snapshotOption(batch.sparkSession)
-        .map(_.unionByName(partial)).getOrElse(partial)
+    val rows = partial.collect()
+    if (rows.nonEmpty) {
+      val spark = batch.sparkSession
+      val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), partial.schema)
+      val all = sink.snapshotOption(spark).map(_.unionByName(local)).getOrElse(local)
       val acc = all
         .groupBy(col("window_start"), col(key))
         .agg(sum(col("count")).as("count"))
@@ -232,5 +263,37 @@ final class Pipeline(
         WindowCounts.countByCountry(batch, windowLength = windowLength),
         "country", orderCol = Some("window_start"))
     } finally batch.unpersist()
+  }
+}
+
+object Pipeline {
+  /** Runs `tasks` at once and returns once every one has completed or
+    * failed, then rethrows the first failure (later ones are attached as
+    * suppressed). Each task gets a thread started here, so it inherits a
+    * copy of the caller's Spark local properties: inside `foreachBatch`
+    * that is the stream's job group, which `StreamingQuery.stop()`
+    * cancels. A long-lived pool would instead carry the properties of
+    * whichever query first started its threads. An interrupt does not cut
+    * the wait short, so no task outlives the call; it is re-raised after.
+    */
+  private[app] def runConcurrently(tasks: Seq[() => Unit]): Unit = {
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val threads = tasks.zipWithIndex.map { case (task, i) =>
+      val t = new Thread(() => try task() catch { case e: Throwable => failures.add(e) },
+        s"${Thread.currentThread().getName}-fan-out-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    Option(failures.poll()).foreach { first =>
+      failures.forEach(e => first.addSuppressed(e))
+      throw first
+    }
   }
 }

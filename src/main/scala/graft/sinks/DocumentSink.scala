@@ -1,8 +1,9 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** S1–S3: idempotent last-write-wins upsert sink keyed by one field.
   *
@@ -32,24 +33,14 @@ object DocumentSink {
     * it mirrors the reference's arrival-order overwrite.
     */
   def lastWritePerKey(batch: DataFrame, keyField: String, orderCol: Option[String]): DataFrame =
-    orderCol match {
-      case Some(oc) =>
-        val w = Window.partitionBy(col(keyField)).orderBy(col(oc).desc)
-        batch.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-      case None =>
-        batch.dropDuplicates(keyField)
-    }
+    firstPerKey(batch, keyField, orderCol.map(col(_).desc).toSeq)
 
-  /** Merge an upsert batch into the existing keyed table. */
-  def merge(existing: Option[DataFrame], batchDeduped: DataFrame, keyField: String): DataFrame =
-    existing match {
-      case None => batchDeduped
-      case Some(ex) =>
-        // anti-join keeps only keys NOT overwritten by this batch; at scale
-        // this is the standard copy-on-write merge (Delta-style); the batch
-        // side is small relative to the table and broadcast-eligible.
-        ex.join(batchDeduped.select(keyField), Seq(keyField), "left_anti")
-          .unionByName(batchDeduped)
+  /** One row per key: the first by `order`, or an arbitrary one without it. */
+  private[sinks] def firstPerKey(rows: DataFrame, keyField: String, order: Seq[Column]): DataFrame =
+    if (order.isEmpty) rows.dropDuplicates(keyField)
+    else {
+      val w = Window.partitionBy(col(keyField)).orderBy(order: _*)
+      rows.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
     }
 }
 
@@ -79,12 +70,17 @@ final class InMemoryDocumentSink extends DocumentSink {
 }
 
 /** Parquet-backed keyed table: the local stand-in for the Mongo collection
-  * (zero-egress sandbox). Copy-on-write: read current, anti-join overwritten
-  * keys, write new version directory, flip a version marker — the same shape
-  * a Delta/Iceberg MERGE takes at cluster scale.
+  * (zero-egress sandbox). Copy-on-write: each upsert writes the whole merged
+  * table to a new version directory `v<n>`, then flips the `_VERSION`
+  * marker to it — the same shape a Delta/Iceberg MERGE takes at cluster
+  * scale. A reader sees either the old or the new version, never a mix.
   */
 final class ParquetDocumentSink(path: String) extends DocumentSink {
   private val fs = java.nio.file.Paths.get(path)
+  /** The version this sink last wrote and its schema: reading that version
+    * back needs no parquet schema inference, which costs a Spark job.
+    */
+  @volatile private var written: Option[(Int, StructType)] = None
 
   private def versionFile = fs.resolve("_VERSION")
   private def currentVersion: Int =
@@ -92,15 +88,33 @@ final class ParquetDocumentSink(path: String) extends DocumentSink {
       new String(java.nio.file.Files.readAllBytes(versionFile)).trim.toInt
     else -1
 
+  private def read(spark: SparkSession, v: Int): DataFrame = {
+    val dir = fs.resolve(s"v$v").toString
+    written match {
+      case Some((`v`, schema)) => spark.read.schema(schema).parquet(dir)
+      case _ => spark.read.parquet(dir)
+    }
+  }
+
+  /** Ranks the current version and the batch together in one pass: per
+    * key, a batch row beats an existing one, and within the batch the
+    * largest `orderCol` wins. The batch side must rank first whatever its
+    * `orderCol`: the snapshot stamp restarts every batch, so an existing
+    * row can carry a larger one.
+    */
   override def upsert(batch: DataFrame, keyField: String, orderCol: Option[String]): Unit = synchronized {
-    val spark = batch.sparkSession
-    val deduped = DocumentSink.lastWritePerKey(batch, keyField, orderCol)
     val v = currentVersion
-    val existing =
-      if (v >= 0) Some(spark.read.parquet(fs.resolve(s"v$v").toString)) else None
-    val merged = DocumentSink.merge(existing, deduped, keyField)
+    val inBatch = orderCol.map(col(_).desc).toSeq
+    val merged =
+      if (v < 0) DocumentSink.firstPerKey(batch, keyField, inBatch)
+      else DocumentSink.firstPerKey(
+          batch.withColumn("__batch", lit(true))
+            .unionByName(read(batch.sparkSession, v).withColumn("__batch", lit(false))),
+          keyField, col("__batch").desc +: inBatch)
+        .drop("__batch")
     val next = v + 1
     merged.write.mode("overwrite").parquet(fs.resolve(s"v$next").toString)
+    written = Some((next, merged.schema))
     java.nio.file.Files.createDirectories(fs)
     java.nio.file.Files.write(versionFile, next.toString.getBytes)
   }
@@ -108,7 +122,7 @@ final class ParquetDocumentSink(path: String) extends DocumentSink {
   override def snapshot(spark: SparkSession): DataFrame = {
     val v = currentVersion
     require(v >= 0, s"no data written to $path yet")
-    spark.read.parquet(fs.resolve(s"v$v").toString)
+    read(spark, v)
   }
 
   override def snapshotOption(spark: SparkSession): Option[DataFrame] =

@@ -1,12 +1,13 @@
 package graft.app
 
 import graft.SparkSpecBase
-import graft.sinks.InMemoryDocumentSink
-import graft.sources.IngestSource
+import graft.operators.EnrichmentJoin
+import graft.sinks.{DocumentSink, InMemoryDocumentSink, ParquetDocumentSink}
+import graft.sources.{FileIngestSource, FixtureGenerator, IngestSource}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** End-to-end: two JSON streams → parse → J1 → three upsert sinks, the full
   * reference topology (`/root/reference/src/main/java/Main.java:45-182`)
@@ -54,57 +55,142 @@ class PipelineSpec extends SparkSpecBase {
     assert(addrs.map(_.getString(0)) == Seq("a1"))
   }
 
-  test("shared single-state topology converges to the same sink state as startAll") {
+  /** Runs the F2 interleaving through the topology `start` builds, into
+    * fresh sinks from `newSink`; returns the (userAddress, state, country)
+    * sinks.
+    */
+  private def runF2[S <: DocumentSink](newSink: () => S)(
+      start: (Pipeline, String) => Seq[StreamingQuery]): (S, S, S) = {
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.streaming.StreamingQuery
-
-    // identical F2 interleaving through either topology, fresh sinks each run
-    def run(start: (Pipeline, String) => Seq[StreamingQuery])
-        : (InMemoryDocumentSink, InMemoryDocumentSink, InMemoryDocumentSink) = {
-      val userStream = MemoryStream[String]
-      val addrStream = MemoryStream[String]
-      val source = new IngestSource {
-        override def users(s: SparkSession): DataFrame = userStream.toDF().toDF("value")
-        override def addresses(s: SparkSession): DataFrame = addrStream.toDF().toDF("value")
-      }
-      val (ua, st, co) =
-        (new InMemoryDocumentSink, new InMemoryDocumentSink, new InMemoryDocumentSink)
-      val pipeline = new Pipeline(source, ua, st, co,
-        windowLength = "1 minute", procTimeExpr = col("user.registerDate"))
-      val cp = java.nio.file.Files.createTempDirectory("graft-cp-shared").toString
-      val queries = start(pipeline, cp)
-      try {
-        userStream.addData(userJson("u1", "Maria", "2026-01-01T10:00:10.000000+0000"))
-        queries.foreach(_.processAllAvailable())
-        addrStream.addData(addrJson("u1", "a1", "IL", "BR"))
-        queries.foreach(_.processAllAvailable())
-        // two addresses in ONE batch: the shared path must accumulate the
-        // batch partial (IL+2) onto the prior partial (IL+1), not overwrite
-        addrStream.addData(addrJson("u1", "a2", "IL", "BR"))
-        queries.foreach(_.processAllAvailable())
-        addrStream.addData(addrJson("u1", "a3", "NY", "US"))
-        queries.foreach(_.processAllAvailable())
-        userStream.addData(userJson("u2", "Joao", "2026-01-01T10:05:30.000000+0000"))
-        queries.foreach(_.processAllAvailable())
-        userStream.addData(userJson("u3", "Ana", "2026-01-01T10:06:00.000000+0000"))
-        queries.foreach(_.processAllAvailable())
-      } finally queries.foreach(_.stop())
-      (ua, st, co)
+    val userStream = MemoryStream[String]
+    val addrStream = MemoryStream[String]
+    val source = new IngestSource {
+      override def users(s: SparkSession): DataFrame = userStream.toDF().toDF("value")
+      override def addresses(s: SparkSession): DataFrame = addrStream.toDF().toDF("value")
     }
+    val (ua, st, co) = (newSink(), newSink(), newSink())
+    val pipeline = new Pipeline(source, ua, st, co,
+      windowLength = "1 minute", procTimeExpr = col("user.registerDate"))
+    val cp = java.nio.file.Files.createTempDirectory("graft-cp-shared").toString
+    val queries = start(pipeline, cp)
+    try {
+      userStream.addData(userJson("u1", "Maria", "2026-01-01T10:00:10.000000+0000"))
+      queries.foreach(_.processAllAvailable())
+      addrStream.addData(addrJson("u1", "a1", "IL", "BR"))
+      queries.foreach(_.processAllAvailable())
+      // two addresses in ONE batch: the shared path must accumulate the
+      // batch partial (IL+2) onto the prior partial (IL+1), not overwrite
+      addrStream.addData(addrJson("u1", "a2", "IL", "BR"))
+      queries.foreach(_.processAllAvailable())
+      addrStream.addData(addrJson("u1", "a3", "NY", "US"))
+      queries.foreach(_.processAllAvailable())
+      userStream.addData(userJson("u2", "Joao", "2026-01-01T10:05:30.000000+0000"))
+      queries.foreach(_.processAllAvailable())
+      userStream.addData(userJson("u3", "Ana", "2026-01-01T10:06:00.000000+0000"))
+      queries.foreach(_.processAllAvailable())
+    } finally queries.foreach(_.stop())
+    (ua, st, co)
+  }
 
-    val (ua1, st1, co1) = run((p, cp) => p.startAll(spark, cp, Trigger.ProcessingTime(0)))
-    val (ua2, st2, co2) = run((p, cp) => Seq(p.startAllShared(spark, cp, Trigger.ProcessingTime(0))))
+  private val startAllQueries = (p: Pipeline, cp: String) =>
+    p.startAll(spark, cp, Trigger.ProcessingTime(0))
+  private val startShared = (p: Pipeline, cp: String) =>
+    Seq(p.startAllShared(spark, cp, Trigger.ProcessingTime(0)))
 
-    // snap_order is a physical emission stamp (monotonic id), not part of
-    // the logical document — compare everything else exactly
-    def canon(s: InMemoryDocumentSink, dropCols: String*): Set[String] =
-      s.snapshot(spark).drop(dropCols: _*).collect().map(_.toString).toSet
+  // snap_order is a physical emission stamp (monotonic id), not part of
+  // the logical document — compare everything else exactly
+  private def canon(s: DocumentSink, dropCols: String*): Set[String] =
+    s.snapshot(spark).drop(dropCols: _*).collect().map(_.toString).toSet
+
+  private def newParquetSink(): ParquetDocumentSink = new ParquetDocumentSink(
+    java.nio.file.Files.createTempDirectory("graft-pq-sink").toString)
+
+  test("shared single-state topology converges to the same sink state as startAll") {
+    val (ua1, st1, co1) = runF2(() => new InMemoryDocumentSink)(startAllQueries)
+    val (ua2, st2, co2) = runF2(() => new InMemoryDocumentSink)(startShared)
     assert(canon(ua2, "snap_order") == canon(ua1, "snap_order"))
     assert(canon(st2) == canon(st1))
     assert(canon(co2) == canon(co1))
     // and the converged values are the §2.1 over-counts
     assert(st2.get("IL").map(_.getLong(2)).contains(5L))
     assert(co2.get("BR").map(_.getLong(2)).contains(5L))
+  }
+
+  test("shared topology over parquet sinks converges to the in-memory tables") {
+    val (ua1, st1, co1) = runF2(() => new InMemoryDocumentSink)(startShared)
+    val (ua2, st2, co2) = runF2(() => newParquetSink())(startShared)
+    assert(canon(ua2, "snap_order") == canon(ua1, "snap_order"))
+    assert(canon(st2) == canon(st1))
+    assert(canon(co2) == canon(co1))
+  }
+
+  test("replaying a batch id through the shared fan-out leaves the count tables unchanged") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-replay").toString
+    FixtureGenerator.writeFiles(dir, seed = 42L)
+    val procTime = lit("2026-01-01 10:00:30").cast("timestamp")
+    val (ua, st, co) = (newParquetSink(), newParquetSink(), newParquetSink())
+    val pipeline = new Pipeline(new FileIngestSource(dir, streaming = false),
+      ua, st, co, procTimeExpr = procTime)
+    val batch = EnrichmentJoin.joinBatch(spark, pipeline.envelopes(spark)).toDF()
+      .withColumn("procTime", procTime)
+    val markers = Files.createTempDirectory("graft-replay-markers")
+    def total(s: DocumentSink): Long =
+      s.snapshot(spark).agg(sum(col("count"))).collect().head.getLong(0)
+
+    pipeline.fanOut(batch, 0L, markers)
+    val (docs, states, countries) = (canon(ua, "snap_order"), canon(st), canon(co))
+    assert(total(st) == 60L && total(co) == 60L)
+    pipeline.fanOut(batch, 0L, markers) // the replay
+    assert(canon(ua, "snap_order") == docs)
+    assert(canon(st) == states && canon(co) == countries)
+    // a count sink whose own marker exists is skipped; the other still merges
+    Files.createFile(markers.resolve("1.state"))
+    pipeline.fanOut(batch, 1L, markers)
+    assert(total(st) == 60L && total(co) == 120L)
+    // a bare batch-id marker counts as both merges done
+    Files.createFile(markers.resolve("2"))
+    pipeline.fanOut(batch, 2L, markers)
+    assert(total(st) == 60L && total(co) == 120L)
+    // a new batch id is merged additively into both
+    pipeline.fanOut(batch, 3L, markers)
+    assert(total(st) == 120L && total(co) == 180L)
+  }
+
+  test("concurrent fan-out: tasks inherit local properties, all finish, first failure rethrown") {
+    val sc = spark.sparkContext
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    sc.setLocalProperty("graft.test.group", "batch-7")
+    try {
+      val err = intercept[IllegalStateException] {
+        Pipeline.runConcurrently(Seq(
+          () => { Thread.sleep(300); seen.add(sc.getLocalProperty("graft.test.group")); slowDone.set(true) },
+          () => throw new IllegalStateException("first"),
+          () => { Thread.sleep(100); throw new IllegalArgumentException("second") }))
+      }
+      assert(err.getMessage == "first")
+      assert(err.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
+      assert(slowDone.get, "returned before every task finished")
+      assert(seen.peek() == "batch-7")
+    } finally sc.setLocalProperty("graft.test.group", null)
+
+    // an interrupt (StreamingQuery.stop) does not cut the wait short
+    val taskDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val started = new java.util.concurrent.CountDownLatch(1)
+    @volatile var doneAtReturn, interruptedAtReturn = false
+    val caller = new Thread(() => {
+      Pipeline.runConcurrently(Seq(
+        () => { started.countDown(); Thread.sleep(300); taskDone.set(true) }))
+      doneAtReturn = taskDone.get
+      interruptedAtReturn = Thread.currentThread().isInterrupted
+    })
+    caller.start()
+    started.await()
+    caller.interrupt()
+    caller.join()
+    assert(doneAtReturn, "returned before the task finished")
+    assert(interruptedAtReturn, "the interrupt was swallowed")
   }
 
   test("full topology: snapshots upserted by userId; windowed counts by state/country") {

@@ -35,6 +35,54 @@ class DocumentSinkSpec extends SparkSpecBase {
     assert(out == Map("u1" -> "a", "u2" -> "B2", "u3" -> "c"))
   }
 
+  test("parquet sink: a batch row beats an existing row with a larger orderCol") {
+    // snap_order restarts every batch, so the existing row can carry the
+    // larger stamp; an order-by-orderCol merge would keep the stale row
+    val dir = java.nio.file.Files.createTempDirectory("graft-sink-order").toString
+    val sink = new ParquetDocumentSink(dir)
+    sink.upsert(Seq(("u1", "old", 100L)).toDF("userId", "payload", "o"), "userId", Some("o"))
+    sink.upsert(Seq(("u1", "new", 0L)).toDF("userId", "payload", "o"), "userId", Some("o"))
+    assert(sink.snapshot(spark).collect().map(_.getString(1)).toSeq == Seq("new"))
+  }
+
+  test("parquet sink: within-batch winner by orderCol, stale keys persist") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sink-lww").toString
+    val sink = new ParquetDocumentSink(dir)
+    sink.upsert(Seq(("IL", 1L, 50L), ("NY", 5L, 50L)).toDF("state", "cnt", "v"),
+      "state", Some("v"))
+    sink.upsert(Seq(("IL", 2L, 20L), ("IL", 3L, 10L), ("TX", 4L, 1L)).toDF("state", "cnt", "v"),
+      "state", Some("v"))
+    val out = sink.snapshot(spark).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(out == Map("IL" -> 2L, "NY" -> 5L, "TX" -> 4L))
+  }
+
+  test("parquet sink: each upsert writes one whole-table version, then flips _VERSION") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft-sink-versions").toString
+    val sink = new ParquetDocumentSink(dir)
+    val versionFile = s"$dir/_VERSION"
+    // evaluated inside the write job: records the marker as the write saw it
+    val seenVersion = org.apache.spark.sql.functions.udf { () =>
+      val f = Paths.get(versionFile)
+      if (Files.exists(f)) Files.readString(f) else "none"
+    }.asNondeterministic()
+    def upsert(rows: (String, String)*): Unit =
+      sink.upsert(rows.toDF("id", "payload").withColumn("seen", seenVersion()), "id")
+    upsert("a" -> "1", "b" -> "1")
+    upsert("b" -> "2")
+    upsert("c" -> "3")
+    val versions = new java.io.File(dir).list().filter(_.startsWith("v")).sorted.toSeq
+    assert(versions == Seq("v0", "v1", "v2"))
+    assert(Files.readString(Paths.get(versionFile)) == "2")
+    def table(v: Int): Map[String, (String, String)] =
+      spark.read.parquet(s"$dir/v$v").collect()
+        .map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+    // every version holds the whole table; the marker still named the
+    // previous version while the new one was being written
+    assert(table(1) == Map("a" -> ("1", "none"), "b" -> ("2", "0")))
+    assert(table(2) == Map("a" -> ("1", "none"), "b" -> ("2", "0"), "c" -> ("3", "1")))
+  }
+
   test("parquet sink vacuum keeps the newest versions and the table stays readable") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vac").toString
     val sink = new ParquetDocumentSink(dir)
