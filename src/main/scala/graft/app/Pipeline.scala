@@ -13,28 +13,20 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * (a) userAddress upsert by userId, (b)/(c) 1-minute windowed address
   * counts upserted by state / country.
   *
-  * Flink fans one DAG out to three sinks; Structured Streaming binds one
-  * sink per query, so `startAll` runs three queries with separate
-  * checkpoints (SURVEY.md §4 "double evaluation"). Each maintains its own
-  * join state store; results are unaffected because the sinks are
-  * idempotent last-write-wins upserts. `startAllShared` is the
-  * single-state alternative to run at scale — one query, one J1 state
-  * store, foreachBatch fan-out (measured 3.2× throughput at 1/3 the state;
-  * ARCHITECTURE.md). Checkpointing (mandatory
-  * in Structured Streaming) plus idempotent sinks gives
+  * Flink fans one job graph out of one keyed state to three sinks;
+  * `startAllShared` keeps that shape: one streaming query, one J1 state
+  * store, and a `foreachBatch` fan-out to the three sinks. Checkpointing
+  * (mandatory in Structured Streaming) plus idempotent sinks gives
   * effectively-exactly-once end-to-end — a strict upgrade over the
   * reference's no-checkpoint posture (§3.4).
   *
   * Window-fire semantics: the reference's processing-time windows emit once
-  * per minute at window close (`Main.java:137,154`). Here the count queries
-  * put a 0-delay watermark on the ingest-stamped `procTime` column and run
-  * in Append mode, so each (window, key) count is emitted at most once, as
-  * a final total rather than as running partials — but only when a later
-  * micro-batch moves the watermark past the window's end. Once input stops
-  * no batch runs, so the last window is never written: draining a finite
-  * input through `startAll` leaves its newest window out of both count
-  * sinks. `startAllShared` merges each batch's partial counts as they
-  * arrive and has no such gap.
+  * per minute at window close (`Main.java:137,154`). Here each micro-batch
+  * merges its partial (window, key) counts into the count sinks as it
+  * arrives, so a window's row holds its running total and reaches the
+  * final total with the window's last batch; nothing waits on a later
+  * batch to close the window, so the newest window is written even once
+  * input stops.
   */
 final class Pipeline(
     source: IngestSource,
@@ -68,31 +60,6 @@ final class Pipeline(
     EnrichmentJoin.joinStream(spark, envelopes(spark), stateTtl).toDF()
       .withColumn("procTime", procTimeExpr)
 
-  private def upsertEachBatch(df: DataFrame, mode: OutputMode, checkpoint: String,
-      trigger: Trigger, sink: DocumentSink, keyField: String,
-      orderCol: Option[String],
-      prep: DataFrame => DataFrame = identity): StreamingQuery =
-    df.writeStream
-      .outputMode(mode)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) sink.upsert(prep(batch), keyField, orderCol)
-      }
-      .start()
-
-  /** S3 query: cumulative snapshots → C3 document shape → upsert by userId.
-    * Successive snapshots overwrite; the collection converges to the full
-    * address list per user (SURVEY.md §2.2).
-    */
-  def startUserAddressQuery(spark: SparkSession, checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    upsertEachBatch(
-      Projections.userAddressDocument(snapshots(spark)),
-      OutputMode.Append, s"$checkpointDir/userAddress", trigger,
-      userAddressSink, "userId", orderCol = Some("snap_order"),
-      prep = withSnapshotOrder)
-
   /** A batch can carry several cumulative snapshots of one user; the upsert
     * must keep the LAST-emitted one. A user's snapshots are produced in
     * emission order by a single task (keyed state op, no shuffle before the
@@ -104,46 +71,10 @@ final class Pipeline(
     docs.withColumn("snap_order",
       org.apache.spark.sql.functions.monotonically_increasing_id())
 
-  private def startCountQuery(spark: SparkSession, byState: Boolean,
-      checkpoint: String, trigger: Trigger): StreamingQuery = {
-    val snap = snapshots(spark).withWatermark("procTime", "0 seconds")
-    val counts =
-      if (byState) WindowCounts.countByState(snap, windowLength = windowLength)
-      else WindowCounts.countByCountry(snap, windowLength = windowLength)
-    val (sink, key) =
-      if (byState) (stateCountSink, "state") else (countryCountSink, "country")
-    // orderCol=window_start: if one batch carries several closed windows,
-    // the newest window deterministically wins the per-key upsert.
-    upsertEachBatch(
-      counts, OutputMode.Append, checkpoint, trigger, sink, key,
-      orderCol = Some("window_start"))
-  }
-
-  /** S1 query: windowed counts by state, upserted by state. */
-  def startStateCountQuery(spark: SparkSession, checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    startCountQuery(spark, byState = true, s"$checkpointDir/stateCounts", trigger)
-
-  /** S2 query: windowed counts by country, upserted by country. */
-  def startCountryCountQuery(spark: SparkSession, checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    startCountQuery(spark, byState = false, s"$checkpointDir/countryCounts", trigger)
-
-  /** Start all three queries (the full reference topology). */
-  def startAll(spark: SparkSession, checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): Seq[StreamingQuery] =
-    Seq(
-      startUserAddressQuery(spark, checkpointDir, trigger),
-      startStateCountQuery(spark, checkpointDir, trigger),
-      startCountryCountQuery(spark, checkpointDir, trigger))
-
-  /** The shared-state topology: ONE streaming query computes the J1
-    * snapshot stream once per micro-batch and `foreachBatch` fans it out to
-    * all three sinks — one checkpoint, one join state store, one pass of
-    * join compute, vs `startAll`'s three queries each rebuilding identical
-    * J1 state (3× RocksDB footprint, 3× join work). This is the plan to run
-    * at large scale; `startAll` remains the contract-faithful literal
-    * translation of the reference's three independent sinks.
+  /** The topology: ONE streaming query computes the J1 snapshot stream
+    * once per micro-batch and `foreachBatch` fans it out to all three
+    * sinks — one checkpoint (`<checkpointDir>/shared`), one join state
+    * store, one pass of join compute.
     *
     * Per micro-batch (`fanOut`): the batch is persisted and materialised by
     * one action, so J1 — its state load and RocksDB commit included — runs
@@ -152,16 +83,15 @@ final class Pipeline(
     * all of them complete or fail before the batch is released.
     *
     * Fan-out semantics inside each batch:
-    *  - userAddress docs: LWW upsert by userId — identical to `startAll`
-    *    and naturally idempotent under batch replay;
+    *  - userAddress docs: LWW upsert by userId, naturally idempotent under
+    *    batch replay;
     *  - window counts: the batch's partial per-(window, key) counts are
     *    merged ADDITIVELY against the sink's current table, then reduced to
     *    LWW-by-newest-window per key. A window spanning many micro-batches
-    *    accumulates to the same total the watermark-gated streaming
-    *    aggregation emits at window close, and a key's row persists until a
-    *    newer window overwrites it (the reference's stale-keys-persist
-    *    contract, SURVEY §2.2). Late partials for an already-superseded
-    *    window are dropped, matching the 0-delay watermark in `startAll`.
+    *    accumulates to the total of every snapshot stamped in it, and a
+    *    key's row persists until a newer window overwrites it (the
+    *    reference's stale-keys-persist contract, SURVEY §2.2). Late
+    *    partials for an already-superseded window are dropped.
     *
     * Additive merge is not idempotent, so batch replay is fenced per count
     * sink: a marker file `<batchId>.<key>` is written after that sink's

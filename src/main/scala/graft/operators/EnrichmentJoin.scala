@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.{Address, User, UserAddress}
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -21,8 +21,11 @@ object Envelope {
   *
   * Re-expresses the reference's `KeyedCoProcessFunction` + two `MapState`s
   * (`/root/reference/src/main/java/Main.java:78-133`) as a pure per-key fold
-  * shared by a batch `flatMapGroups` path (oracle-testable) and a streaming
-  * `flatMapGroupsWithState` path. The exact contract (SURVEY.md §2.1):
+  * (`step`, the one encoding of the J1 transitions). Three paths fold through
+  * it: the batch `flatMapSortedGroups` path (oracle-testable), the streaming
+  * `flatMapGroupsWithState` path that `Pipeline` runs, and the opt-in
+  * event-time processor (`EnrichmentProcessorEventTime`). The exact contract
+  * (SURVEY.md §2.1):
   *
   *  1. user arrival  → store/overwrite user (last-write-wins), ALWAYS emit
   *     the current snapshot, with an empty list if no addresses yet
@@ -32,9 +35,9 @@ object Envelope {
   *     (`Main.java:118-132`);
   *  3. consequence: an address-then-user interleaving emits nothing until the
   *     user lands; snapshots are cumulative prefixes with no retractions;
-  *  4. state is never cleared in the reference; here an optional TTL is
-  *     exposed for 100 TB operation (unbounded per-key state does not survive
-  *     real workloads) and defaults OFF for parity.
+  *  4. state is never cleared in the reference; here an optional idle-key
+  *     TTL is exposed for 100 TB operation (unbounded per-key state does not
+  *     survive real workloads) and defaults OFF for parity.
   */
 object EnrichmentJoin {
 
@@ -87,16 +90,9 @@ object EnrichmentJoin {
       }
   }
 
-  /** Streaming mode: per-key `GroupState` replaces the reference's
-    * `MapState`-inside-keyed-stream (degenerate single-entry map,
-    * SURVEY.md §2.1.5). Append output mode: the snapshot stream is
-    * append-only (no retractions), exactly like the reference.
-    *
-    * @param stateTtl optional processing-time TTL after which an idle key's
-    *                 state is dropped (reference behavior = None = never).
-    */
-  /** The per-key state-update function, exposed so tests can drive it with
-    * `TestGroupState` (incl. the timeout branch) without a running stream.
+  /** The per-key state-update function of `joinStream`, exposed so tests
+    * can drive it with `TestGroupState` (incl. the timeout branch) without
+    * a running stream.
     */
   def stateFunc(stateTtl: Option[java.time.Duration])(
       key: String, it: Iterator[Envelope],
@@ -114,6 +110,22 @@ object EnrichmentJoin {
       out
     }
 
+  /** Streaming mode: per-key `GroupState` replaces the reference's
+    * `MapState`-inside-keyed-stream (degenerate single-entry map,
+    * SURVEY.md §2.1.5). Append output mode: the snapshot stream is
+    * append-only (no retractions), exactly like the reference.
+    *
+    * Each update writes the key's whole state (user + address list). A
+    * `transformWithState` twin that appends to a `ListState` instead
+    * measured slower on the live topology (batch latency and state commit
+    * both up, twice the state rows), so this is the one processing-time
+    * backend.
+    *
+    * @param stateTtl optional idle-key TTL: a `ProcessingTimeTimeout`
+    *                 re-armed on every batch that carries the key drops
+    *                 its state once no event arrived for that long
+    *                 (reference behavior = None = never).
+    */
   def joinStream(
       spark: SparkSession,
       events: Dataset[Envelope],

@@ -4,64 +4,6 @@ import graft.core.{Address, User, UserAddress}
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
-/** J1 on Spark 4's `transformWithState` — the scale-path backend.
-  *
-  * `flatMapGroupsWithState` must rewrite the key's ENTIRE state value
-  * (user + full address list) on every event: O(list) write amplification
-  * per address, which is what kills unbounded per-key lists at 100 TB. This
-  * processor keeps the user in a `ValueState` and the addresses in a
-  * `ListState`, so an address arrival is a single O(1) RocksDB append; the
-  * full list is only read on emission (which the cumulative-snapshot
-  * contract requires anyway). State TTL is native (`TTLConfig`) instead of
-  * hand-rolled timeout handling.
-  *
-  * Semantics are identical to `EnrichmentJoin` (SURVEY.md §2.1, reference
-  * `/root/reference/src/main/java/Main.java:78-133`) and pinned by the same
-  * scenario matrix in EnrichmentJoinTwsSpec.
-  *
-  * Requires the RocksDB state store provider
-  * (`spark.sql.streaming.stateStore.providerClass`).
-  */
-class EnrichmentProcessor(stateTtl: Option[java.time.Duration])
-    extends StatefulProcessor[String, Envelope, UserAddress] {
-
-  @transient private var userState: ValueState[User] = _
-  @transient private var addrState: ListState[Address] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    val ttl = stateTtl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    userState = getHandle.getValueState[User]("user", Encoders.product[User], ttl)
-    addrState = getHandle.getListState[Address]("addresses", Encoders.product[Address], ttl)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[Envelope],
-      timerValues: TimerValues): Iterator[UserAddress] = {
-    val out = Vector.newBuilder[UserAddress]
-    // cache the list once per (key, batch); appends go to both the local
-    // buffer and the incremental ListState
-    var addrs: Vector[Address] = null
-    def loadedAddrs(): Vector[Address] = {
-      if (addrs == null) addrs = addrState.get().toVector
-      addrs
-    }
-    rows.toVector.sortBy(_.seq).foreach {
-      case Envelope(_, _, Some(u), _) =>
-        // Main.java:104-115 — store/overwrite, ALWAYS emit current snapshot
-        userState.update(u)
-        out += UserAddress(u, loadedAddrs())
-      case Envelope(_, _, _, Some(a)) =>
-        // Main.java:118-132 — O(1) append; emit only if user known.
-        // Snapshot the list BEFORE appending: the append is immediately
-        // visible to get(), so reading after would double-count.
-        addrs = loadedAddrs() :+ a
-        addrState.appendValue(a)
-        if (userState.exists()) out += UserAddress(userState.get(), addrs)
-      case _ =>
-    }
-    out.result().iterator
-  }
-}
-
 /** Envelope variant carrying an EVENT time for the opt-in event-time mode:
   * users are stamped with their own `registerDate` (the one event-time
   * field the reference wire format has); addresses carry no timestamp on
@@ -70,7 +12,9 @@ class EnrichmentProcessor(stateTtl: Option[java.time.Duration])
   * explicit stamp.
   */
 final case class TimedEnvelope(key: String, seq: Long,
-    eventTime: java.sql.Timestamp, user: Option[User], address: Option[Address])
+    eventTime: java.sql.Timestamp, user: Option[User], address: Option[Address]) {
+  def envelope: Envelope = Envelope(key, seq, user, address)
+}
 
 object TimedEnvelope {
   def ofUser(u: User, seq: Long = 0L): TimedEnvelope =
@@ -81,7 +25,7 @@ object TimedEnvelope {
 }
 
 /** J1 in EVENT-TIME mode — the opt-in divergence from the reference's
-  * processing-time contract (which [[EnrichmentProcessor]] preserves):
+  * processing-time contract (which `EnrichmentJoin.joinStream` preserves):
   *
   *  - rows with event time behind the watermark are DROPPED by the
   *    operator before they reach the state machine (a late address never
@@ -93,8 +37,11 @@ object TimedEnvelope {
   *    a key the watermark has retired, unlike processing-time TTL whose
   *    expiry depends on wall-clock job health.
   *
-  * Same O(1)-append state layout as [[EnrichmentProcessor]]; the
-  * per-event transition is the same SURVEY §2.1 machine.
+  * The user sits in a `ValueState` and the addresses in a `ListState`, so
+  * a batch's new addresses are one append, not a rewrite of the key's
+  * whole list. The per-event transitions are `EnrichmentJoin.step`'s: each
+  * key's batch is folded through `EnrichmentJoin.runKey` from the stored
+  * state, and only what the fold changed is written back.
   */
 class EnrichmentProcessorEventTime(ttlMs: Option[Long])
     extends StatefulProcessor[String, TimedEnvelope, UserAddress] {
@@ -103,8 +50,8 @@ class EnrichmentProcessorEventTime(ttlMs: Option[Long])
   @transient private var addrState: ListState[Address] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    // TTL here is timer-driven (event time); TTLConfig is processing-time
-    // only, so the states are registered without it
+    // TTL here is timer-driven (event time); the handle has no overload
+    // without a TTLConfig, so the states are registered with none
     userState = getHandle.getValueState[User]("user",
       Encoders.product[User], TTLConfig.NONE)
     addrState = getHandle.getListState[Address]("addresses",
@@ -113,37 +60,25 @@ class EnrichmentProcessorEventTime(ttlMs: Option[Long])
 
   override def handleInputRows(key: String, rows: Iterator[TimedEnvelope],
       timerValues: TimerValues): Iterator[UserAddress] = {
-    val out = Vector.newBuilder[UserAddress]
-    var addrs: Vector[Address] = null
-    def loadedAddrs(): Vector[Address] = {
-      if (addrs == null) addrs = addrState.get().toVector
-      addrs
-    }
-    var maxEventMs = Long.MinValue
-    rows.toVector.sortBy(_.seq).foreach { ev =>
-      maxEventMs = math.max(maxEventMs, ev.eventTime.getTime)
-      ev match {
-        case TimedEnvelope(_, _, _, Some(u), _) =>
-          userState.update(u)
-          out += UserAddress(u, loadedAddrs())
-        case TimedEnvelope(_, _, _, _, Some(a)) =>
-          addrs = loadedAddrs() :+ a
-          addrState.appendValue(a)
-          if (userState.exists()) out += UserAddress(userState.get(), addrs)
-        case _ =>
-      }
-    }
+    val events = rows.toVector.sortBy(_.seq)
+    val init = EnrichmentJoin.JoinState(
+      if (userState.exists()) Some(userState.get()) else None,
+      addrState.get().toVector)
+    val (s, out) = EnrichmentJoin.runKey(events.iterator.map(_.envelope), init)
+    if (s.user != init.user) s.user.foreach(userState.update)
+    val added = s.addresses.drop(init.addresses.length)
+    if (added.nonEmpty) addrState.appendList(added.toArray)
     // one armed timer per key: re-arm at last-activity-in-event-time + ttl
     // (materialize the timer list before deleting — no mutation under the
     // state store's own iterator)
     ttlMs.foreach { ttl =>
-      if (maxEventMs != Long.MinValue) {
+      events.map(_.eventTime.getTime).maxOption.foreach { maxEventMs =>
         getHandle.listTimers().toVector
           .foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
         getHandle.registerTimer(maxEventMs + ttl)
       }
     }
-    out.result().iterator
+    out
   }
 
   override def handleExpiredTimer(key: String, timerValues: TimerValues,
@@ -155,33 +90,20 @@ class EnrichmentProcessorEventTime(ttlMs: Option[Long])
 }
 
 object EnrichmentJoinTws {
-  /** Streaming J1 via transformWithState (Spark 4 scale path). */
-  def joinStream(
-      spark: SparkSession,
-      events: Dataset[Envelope],
-      stateTtl: Option[java.time.Duration] = None): Dataset[UserAddress] = {
-    import spark.implicits._
-    // state TTL requires the processing-time mode (TTL expiry is stamped
-    // against batch processing time); without TTL, TimeMode.None avoids
-    // the per-batch timestamp bookkeeping
-    val timeMode =
-      if (stateTtl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    events
-      .groupByKey(_.key)
-      .transformWithState(
-        new EnrichmentProcessor(stateTtl), timeMode, OutputMode.Append())
-  }
-
   /** Streaming J1 in OPT-IN event-time mode: watermark on `eventTime`
     * (users: `registerDate`; addresses: caller-stamped), late rows
     * dropped at the operator, TTL expiring in event time via timers.
-    * The default [[joinStream]] remains the reference-faithful
+    * `EnrichmentJoin.joinStream` remains the reference-faithful
     * processing-time contract (`WatermarkStrategy.noWatermarks()`,
-    * `Main.java:70-71`); choose this mode when the 100 TB posture must
-    * bound state by the data's own clock and accept that sufficiently
-    * late addresses are discarded rather than buffered forever.
-    * Divergence from the processing-time mode is pinned by
-    * `PipelineSpec`'s dual-mode interleaving case.
+    * `Main.java:70-71`); choose this mode when state must be bounded by
+    * the data's own clock and sufficiently late addresses may be
+    * discarded rather than buffered forever. The lateness semantics
+    * follow the Watermarks paper (VLDB 2021). Divergence from the
+    * processing-time mode is pinned by `PipelineSpec`'s dual-mode
+    * interleaving case.
+    *
+    * Requires the RocksDB state store provider
+    * (`spark.sql.streaming.stateStore.providerClass`).
     */
   def joinStreamEventTime(
       spark: SparkSession,

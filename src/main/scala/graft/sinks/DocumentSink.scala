@@ -116,7 +116,13 @@ final class ParquetDocumentSink(path: String) extends DocumentSink {
     merged.write.mode("overwrite").parquet(fs.resolve(s"v$next").toString)
     written = Some((next, merged.schema))
     java.nio.file.Files.createDirectories(fs)
-    java.nio.file.Files.write(versionFile, next.toString.getBytes)
+    // write-then-rename: `Files.write` truncates before it writes, so a
+    // reader between the two would see an empty marker
+    val tmp = java.nio.file.Files.createTempFile(fs, "_VERSION", ".tmp")
+    java.nio.file.Files.write(tmp, next.toString.getBytes)
+    java.nio.file.Files.move(tmp, versionFile,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
   override def snapshot(spark: SparkSession): DataFrame = {

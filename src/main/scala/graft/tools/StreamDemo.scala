@@ -1,15 +1,15 @@
 package graft.tools
 
 import graft.core.Schemas
-import graft.operators.{EnrichmentJoinTws, Envelope}
+import graft.operators.{EnrichmentJoin, Envelope}
 import graft.sources.{FileIngestSource, FixtureGenerator}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 /** End-to-end streaming demo: seeded fixture files → streaming file source
-  * → wire-format parse → transformWithState enrichment join (RocksDB
-  * ListState) → console-style collected output. Runnable smoke of the full
+  * → wire-format parse → `flatMapGroupsWithState` enrichment join (RocksDB
+  * state store) → console-style collected output. Runnable smoke of the full
   * streaming topology outside the test harness.
   */
 object StreamDemo {
@@ -29,7 +29,7 @@ object StreamDemo {
     val source = new FileIngestSource(dir, streaming = true)
     val users = Schemas.parseUsers(source.users(spark)).map(Envelope.ofUser(_, 0L))
     val addrs = Schemas.parseAddresses(source.addresses(spark)).map(Envelope.ofAddress(_, 1L))
-    val snapshots = EnrichmentJoinTws.joinStream(spark, users.unionByName(addrs))
+    val snapshots = EnrichmentJoin.joinStream(spark, users.unionByName(addrs))
 
     val q = snapshots.toDF()
       .select(col("user.id").as("userId"), col("user.name").as("name"),

@@ -1,32 +1,29 @@
 package graft.tools
 
 import graft.core.Schemas
-import graft.operators.{EnrichmentJoinTws, Envelope}
+import graft.operators.{EnrichmentJoin, Envelope}
 import graft.sources.{FileIngestSource, FixtureGenerator}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Streaming probes for the J1 path. Three modes:
+/** Streaming probes for the J1 path (`EnrichmentJoin.joinStream`, the
+  * `flatMapGroupsWithState` backend `Pipeline` runs, on the RocksDB state
+  * store). Three modes:
   *
   *  - `join` (default): raw throughput of N generated wire messages →
-  *    file source → JSON parse → transformWithState enrichment join
-  *    (RocksDB state store) → counted sink. Prints wall-clock and msg/s.
+  *    file source → JSON parse → enrichment join → counted sink. Prints
+  *    wall-clock and msg/s.
   *    Context: the reference's producer emits 40 Kafka messages per run
   *    total (`user-generator.py`, BASELINE.md) with a parallelism-1
   *    aggregation downstream, so any sustained five-digit msg/s figure is
   *    orders of magnitude beyond the reference's demonstrated scale.
   *
-  *  - `fanout`: the 100 TB question from SURVEY §4 — run the SAME fixture
-  *    through `Pipeline.startAll` (three queries, each rebuilding J1 state)
-  *    and `Pipeline.startAllShared` (one query, foreachBatch fan-out) and
-  *    print wall-clock + total state-store rows for each. Expected: ~3×
-  *    state rows and ~3× join compute for the triple topology.
-  *
-  *  - `ttl`: state-growth evidence for TTLConfig — replay a key-churn
-  *    workload (three waves of fresh keys, idle gaps between waves) with
-  *    TTL off vs TTL on and print final state rows. TTL-off retains every
-  *    key ever seen; TTL-on converges to ~one wave's working set.
+  *  - `ttl`: state-growth evidence for the idle-key processing-time
+  *    timeout — replay a key-churn workload (three waves of fresh keys,
+  *    idle gaps between waves) with the TTL off vs on and print final
+  *    state rows. TTL-off retains every key ever seen; TTL-on converges
+  *    to ~one wave's working set.
   *
   *  - `soak`: the STATE-SCALE curve the no-TTL default implies (SURVEY
   *    §2.1.4) — waves of `nUsers` FRESH keys (user + 1 address each)
@@ -69,7 +66,6 @@ object StreamThroughput {
     try {
       mode match {
         case "join" => joinProbe(spark, nUsers)
-        case "fanout" => fanoutProbe(spark, nUsers)
         case "ttl" => ttlProbe(spark, math.min(nUsers, 5000))
         case "soak" => soakProbe(spark, nUsers,
           args.lift(2).map(_.toInt).getOrElse(10))
@@ -100,7 +96,7 @@ object StreamThroughput {
     val source = new FileIngestSource(dir, streaming = true)
     val users = Schemas.parseUsers(source.users(spark)).map(Envelope.ofUser(_, 0L))
     val addrs = Schemas.parseAddresses(source.addresses(spark)).map(Envelope.ofAddress(_, 1L))
-    val snapshots = EnrichmentJoinTws.joinStream(spark, users.unionByName(addrs))
+    val snapshots = EnrichmentJoin.joinStream(spark, users.unionByName(addrs))
 
     val t0 = System.nanoTime()
     val q = snapshots.toDF()
@@ -112,32 +108,6 @@ object StreamThroughput {
     val emissions = spark.sql("SELECT COUNT(*) FROM tp").collect().head.getLong(0)
     println(f"THROUGHPUT messages=$nMessages emissions=$emissions wall=$secs%.1fs " +
       f"rate=${nMessages / secs}%.0f msg/s")
-  }
-
-  /** startAll (triple-state) vs startAllShared (single-state) on one fixture. */
-  def fanoutProbe(spark: SparkSession, nUsers: Int): Unit = {
-    import graft.app.Pipeline
-    import graft.sinks.InMemoryDocumentSink
-    val dir = java.nio.file.Files.createTempDirectory("graft-fanout").toString
-    FixtureGenerator.writeFiles(dir, seed = 42L, nUsers = nUsers, addressesPerUser = 3)
-    val nMessages = nUsers * 4
-
-    def run(label: String, start: (Pipeline, String) => Seq[StreamingQuery]): Unit = {
-      val pipeline = new Pipeline(
-        new FileIngestSource(dir, streaming = true),
-        new InMemoryDocumentSink, new InMemoryDocumentSink, new InMemoryDocumentSink)
-      val cp = java.nio.file.Files.createTempDirectory(s"graft-fanout-cp").toString
-      val t0 = System.nanoTime()
-      val qs = start(pipeline, cp)
-      try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
-      val secs = (System.nanoTime() - t0) / 1e9
-      val rows = qs.map(stateRows).sum
-      println(f"FANOUT topology=$label queries=${qs.size} messages=$nMessages " +
-        f"wall=$secs%.1fs rate=${nMessages / secs}%.0f msg/s stateRows=$rows")
-    }
-
-    run("triple", (p, cp) => p.startAll(spark, cp, Trigger.ProcessingTime(0)))
-    run("shared", (p, cp) => Seq(p.startAllShared(spark, cp, Trigger.ProcessingTime(0))))
   }
 
   /** State-scale soak: disjoint key waves against ONE resumed RocksDB
@@ -167,7 +137,7 @@ object StreamThroughput {
             id, s"$i Main St", "Springfield", "ST", "12345", "US"))))
       }: _*)
       val t0 = System.nanoTime()
-      val q = EnrichmentJoinTws.joinStream(spark, input.toDS())
+      val q = EnrichmentJoin.joinStream(spark, input.toDS())
         .toDF().select(col("user.id"))
         .writeStream
         .option("checkpointLocation", cp)
@@ -214,12 +184,12 @@ object StreamThroughput {
             id, s"u$id", s"u$id@x.org", "F",
             java.sql.Timestamp.valueOf("2026-01-01 10:00:00"))), None)
         }: _*)
-        // Trigger.Once, not AvailableNow: under TimeMode.ProcessingTime the
-        // TTL timer keeps scheduling no-data batches, so an AvailableNow
+        // Trigger.Once, not AvailableNow: under ProcessingTimeTimeout the
+        // operator asks for a no-data batch on every trigger, so an AvailableNow
         // query busy-loops for its full await window and floods
         // recentProgress; one batch per restart is exactly the probe shape
         @annotation.nowarn("cat=deprecation")
-        val q = EnrichmentJoinTws.joinStream(spark, input.toDS(), ttl)
+        val q = EnrichmentJoin.joinStream(spark, input.toDS(), ttl)
           .toDF().select(col("user.id"))
           .writeStream
           .option("checkpointLocation", cp)

@@ -5,7 +5,8 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for the suite (one JVM-wide session keeps the
-  * suite fast; tests must not mutate global conf destructively).
+  * suite fast; tests must not mutate global conf destructively). Stateful
+  * streams run on the RocksDB state store, as the benchmarked sessions do.
   */
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
@@ -20,5 +21,7 @@ object SparkSpecBase {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    .config("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     .getOrCreate()
 }

@@ -88,18 +88,63 @@ class EnrichmentJoinSpec extends SparkSpecBase {
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(0))
       .start()
+    def rows(uid: String): Seq[(String, List[String])] = spark.sql(
+      s"SELECT user.name, transform(addresses, x -> x.address) FROM j1_stream WHERE user.id = '$uid'")
+      .collect().map(r => (r.getString(0), r.getSeq[String](1).toList)).toSeq
     try {
-      input.addData(Envelope.ofUser(u("u1"), 0))
+      // u1: user, then one address per batch; u2 (F3/F4): an address
+      // buffered before its user, then a rename (F6) in a later batch
+      input.addData(Envelope.ofUser(u("u1"), 0), Envelope.ofAddress(a("u2", "b0"), 0))
       q.processAllAvailable()
-      input.addData(Envelope.ofAddress(a("u1", "a1"), 1))
+      assert(rows("u2").isEmpty) // buffered silently
+      input.addData(Envelope.ofAddress(a("u1", "a1"), 1), Envelope.ofUser(u("u2"), 1))
       q.processAllAvailable()
-      input.addData(Envelope.ofAddress(a("u1", "a2"), 2))
+      input.addData(Envelope.ofAddress(a("u1", "a2"), 2), Envelope.ofAddress(a("u2", "b1"), 2))
       q.processAllAvailable()
-      val rows = spark.sql("SELECT addresses FROM j1_stream").collect()
-      assert(rows.length == 3) // [], [a1], [a1,a2] — cumulative across batches
-      val sizes = rows.map(_.getSeq[Any](0).size).sorted.toSeq
-      assert(sizes == Seq(0, 1, 2))
+      input.addData(Envelope.ofUser(u("u2", "renamed"), 3))
+      q.processAllAvailable()
+      // [], [a1], [a1,a2] — cumulative across batches
+      assert(rows("u1").map(_._2.size).sorted == Seq(0, 1, 2))
+      val u2 = rows("u2")
+      assert(u2.map(_._2.size).sorted == Seq(1, 2, 2))
+      // the rename re-emits with the whole list; the buffered b0 leads
+      // every emission
+      assert(u2.exists { case (n, ad) => n == "renamed" && ad == List("b0", "b1") })
+      assert(u2.forall(_._2.head == "b0"))
     } finally q.stop()
+  }
+
+  test("checkpoint recovery at large key count: restart resumes 20k-key state intact") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val cp = java.nio.file.Files.createTempDirectory("graft-j1-recovery").toString
+    val n = 20000
+    val input = MemoryStream[Envelope]
+    val counts = new java.util.concurrent.atomic.AtomicLong()
+    def runWave(): Unit = {
+      val q = EnrichmentJoin.joinStream(spark, input.toDS())
+        .toDF().select(org.apache.spark.sql.functions.col("user.id"))
+        .writeStream
+        .option("checkpointLocation", cp)
+        .outputMode("append").trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          counts.addAndGet(b.count()); ()
+        }
+        .start()
+      q.awaitTermination(300000)
+      q.stop()
+    }
+    // wave 1: n users → n snapshot emissions, state = n keys
+    input.addData((0 until n).map(i => Envelope.ofUser(u(i.toString), 0)): _*)
+    runWave()
+    assert(counts.get() == n.toLong)
+    // wave 2 RESUMES the checkpoint at n keys: one address per existing
+    // key must emit exactly one snapshot each — possible only if the
+    // restarted store still holds every buffered user
+    input.addData((0 until n).map(i => Envelope.ofAddress(a(i.toString, s"addr$i"), 1)): _*)
+    runWave()
+    assert(counts.get() == 2L * n,
+      s"expected ${2L * n} total emissions after recovery, got ${counts.get()}")
   }
 
   test("TTL branch: timed-out key's state is removed; TTL is re-armed on data") {

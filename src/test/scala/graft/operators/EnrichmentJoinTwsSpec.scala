@@ -5,96 +5,70 @@ import graft.core.{Address, User}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
-/** The transformWithState backend must reproduce the same §2.1 contract as
-  * the flatMapGroupsWithState one, with incremental ListState appends.
+/** The event-time `transformWithState` processor folds each key's batch
+  * through `EnrichmentJoin.step` and writes back only what the fold
+  * changed: the user when it changed, and the batch's new addresses as one
+  * append to the stored list.
   */
 class EnrichmentJoinTwsSpec extends SparkSpecBase {
 
-  private val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
-  private def u(id: String, name: String = "n") = User(id, name, s"$name@x", "F", ts)
-  private def a(uid: String, tag: String) = Address(uid, tag, "c", s"S-$tag", "z", s"C-$tag")
+  private def ts(s: String) = java.sql.Timestamp.valueOf(s"2026-01-01 $s")
+  private def u(name: String, at: String) = User("u1", name, s"$name@x", "F", ts(at))
+  private def a(tag: String, at: String) =
+    TimedEnvelope.ofAddress(Address("u1", tag, "c", "IL", "z", "BR"), ts(at))
 
   test("cumulative snapshots across micro-batches (RocksDB ListState)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[Envelope]
-    val q = EnrichmentJoinTws.joinStream(spark, input.toDS())
-      .writeStream.format("memory").queryName("j1_tws")
+    val input = MemoryStream[TimedEnvelope]
+    val q = EnrichmentJoinTws.joinStreamEventTime(spark, input.toDS())
+      .toDF().writeStream.format("memory").queryName("j1_et_cumulative")
       .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
     try {
       // F3/F4: address before user buffers silently, then flows
-      input.addData(Envelope.ofAddress(a("u1", "a0"), 0))
+      input.addData(a("a0", "10:00:00"))
       q.processAllAvailable()
-      assert(spark.sql("SELECT * FROM j1_tws").count() == 0)
-      input.addData(Envelope.ofUser(u("u1"), 1))
+      assert(spark.sql("SELECT * FROM j1_et_cumulative").count() == 0)
+      input.addData(TimedEnvelope.ofUser(u("n", "10:00:01")))
       q.processAllAvailable()
-      input.addData(Envelope.ofAddress(a("u1", "a1"), 2))
+      input.addData(a("a1", "10:00:02"))
       q.processAllAvailable()
       // F6: user re-send, last-write-wins
-      input.addData(Envelope.ofUser(u("u1", "renamed"), 3))
+      input.addData(TimedEnvelope.ofUser(u("renamed", "10:00:03")))
       q.processAllAvailable()
       val rows = spark.sql(
-        "SELECT user.name, transform(addresses, x -> x.address) AS addrs FROM j1_tws")
+        "SELECT user.name, transform(addresses, x -> x.address) AS addrs FROM j1_et_cumulative")
         .collect().map(r => (r.getString(0), r.getSeq[String](1).toList))
       assert(rows.length == 3)
       assert(rows.map(_._2.size).sorted.toSeq == Seq(1, 2, 2))
       // buffered a0 present in the first emission; rename visible in the last
       assert(rows.exists { case (n, ad) => n == "renamed" && ad == List("a0", "a1") })
       assert(rows.forall(_._2.head == "a0"))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally q.stop()
   }
 
-  test("checkpoint recovery at large key count: restart resumes 20k-key state intact") {
+  test("event-time mode: each batch appends only its new addresses to the stored list") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val cp = java.nio.file.Files.createTempDirectory("graft-tws-recovery").toString
-    val n = 20000
-    val input = MemoryStream[Envelope]
-    val counts = new java.util.concurrent.atomic.AtomicLong()
-    def runWave(): Unit = {
-      val q = EnrichmentJoinTws.joinStream(spark, input.toDS())
-        .toDF().select(org.apache.spark.sql.functions.col("user.id"))
-        .writeStream
-        .option("checkpointLocation", cp)
-        .outputMode("append").trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          counts.addAndGet(b.count()); ()
-        }
-        .start()
-      q.awaitTermination(300000)
-      q.stop()
-    }
+    val input = MemoryStream[TimedEnvelope]
+    val q = EnrichmentJoinTws.joinStreamEventTime(spark, input.toDS())
+      .toDF().writeStream.format("memory").queryName("j1_et_append")
+      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
     try {
-      // wave 1: n users → n snapshot emissions, state = n keys
-      input.addData((0 until n).map(i =>
-        Envelope.ofUser(u(i.toString), 0)): _*)
-      runWave()
-      assert(counts.get() == n.toLong)
-      // wave 2 RESUMES the checkpoint at n keys: one address per existing
-      // key must emit exactly one snapshot each — possible only if the
-      // restarted store still holds every buffered user
-      input.addData((0 until n).map(i =>
-        Envelope.ofAddress(a(i.toString, s"addr$i"), 1)): _*)
-      runWave()
-      assert(counts.get() == 2L * n,
-        s"expected ${2L * n} total emissions after recovery, got ${counts.get()}")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+      input.addData(TimedEnvelope.ofUser(u("Maria", "10:00:00")), a("a1", "10:00:01"))
+      q.processAllAvailable()
+      input.addData(a("a2", "10:00:02"))
+      q.processAllAvailable()
+      // the rename sorts before the address (seq 0 < 1) and re-emits the
+      // stored list; the third batch reads what the first two stored
+      input.addData(TimedEnvelope.ofUser(u("Renamed", "10:00:04")), a("a3", "10:00:03"))
+      q.processAllAvailable()
+      val rows = spark.sql(
+        "SELECT user.name, transform(addresses, x -> x.address) FROM j1_et_append")
+        .collect().map(r => (r.getString(0), r.getSeq[String](1).toList)).toSet
+      assert(rows == Set(
+        ("Maria", Nil), ("Maria", List("a1")), ("Maria", List("a1", "a2")),
+        ("Renamed", List("a1", "a2")), ("Renamed", List("a1", "a2", "a3"))))
+    } finally q.stop()
   }
 }

@@ -83,6 +83,24 @@ class DocumentSinkSpec extends SparkSpecBase {
     assert(table(2) == Map("a" -> ("1", "none"), "b" -> ("2", "0"), "c" -> ("3", "1")))
   }
 
+  test("parquet sink: a reader concurrent with upserts never sees a half-written _VERSION") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sink-flip").toString
+    val sink = new ParquetDocumentSink(dir)
+    sink.upsert(Seq(("k", 0L)).toDF("id", "v"), "id")
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val reads = new java.util.concurrent.atomic.AtomicLong()
+    val reader = new Thread(() =>
+      try while (!stop.get) { sink.snapshotOption(spark); reads.incrementAndGet() }
+      catch { case e: Throwable => failure.set(e) })
+    reader.start()
+    try (1 to 50).foreach(i => sink.upsert(Seq(("k", i.toLong)).toDF("id", "v"), "id"))
+    finally { stop.set(true); reader.join() }
+    assert(failure.get == null, s"reader failed: ${failure.get}")
+    assert(reads.get > 0)
+    assert(sink.snapshot(spark).collect().head.getLong(1) == 50L)
+  }
+
   test("parquet sink vacuum keeps the newest versions and the table stays readable") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vac").toString
     val sink = new ParquetDocumentSink(dir)
