@@ -1,19 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.tools.ScaleKnobs.forDir(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions"),
-      sfDir, cpus.toIntOption.getOrElse(4))
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(4)
+    val spark = Sessions.local(cpus, Some(sfDir))
     spark.sparkContext.setLogLevel("WARN")
+    val profiler = graft.obs.Profiler.attach(spark)
     // Ambient-contention evidence travels WITH the measurement (r15
     // verdict item 6): /proc/loadavg at start+end and the untimed-warmup
     // duration let a future band-shift adjudication read contention off
@@ -59,6 +52,9 @@ object Bench {
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(3)
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
     val times = scala.collection.mutable.Map.empty[String, List[Double]]
+    // each query's last timed pass is profiled; the profile's own listener
+    // drains run outside the timed interval
+    val layers = scala.collection.mutable.Map.empty[String, String]
     // Machine canary, one per pass: a deterministic Spark-independent
     // workload (xorshift-fill + parallel sort of 48M longs — multicore
     // memory+CPU bound, ~1 s) whose time depends ONLY on the machine.
@@ -90,10 +86,14 @@ object Bench {
       // attribute the death to a query — the r15 100× sweep died twice
       // at an unattributable "stage 240" before this line existed
       System.err.println(s"[bench] pass $pass $name")
-      val t0 = System.nanoTime()
-      try {
+      def run(): Unit = {
+        val t0 = System.nanoTime()
         materialise(fn(spark, sfDir))
         times(name) = ((System.nanoTime() - t0) / 1e9) :: times.getOrElse(name, Nil)
+      }
+      try {
+        if (pass == passes) layers(name) = profiler.profile(name)(run()).json
+        else run()
       } catch {
         case e: Throwable =>
           // surface failures instead of letting a broken query look fast
@@ -146,13 +146,14 @@ object Bench {
     // round's comparison), so also persist the full record in the repo.
     // Best-effort — an unwritable cwd must not fail the bench itself.
     try {
-      val cfg = Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_INIT_PARTS",
-          "SPARK_GRAFT_ADVISORY", "SPARK_GRAFT_CC_LOCAL_MAX")
+      val cfg = Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_CC_LOCAL_MAX")
         .flatMap(k => sys.env.get(k).map(v => s"\"${esc(k)}\":\"${esc(v)}\""))
         .mkString("{", ",", "}")
+      val layersJson = layers.toSeq.sortBy(_._1)
+        .map { case (k, v) => s"\"${esc(k)}\":$v" }.mkString("{", ",", "}")
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_full.json"),
-        s"""{"config":$cfg,${line.drop(1)}""".getBytes("UTF-8"))
+        s"""{"config":$cfg,"layers":$layersJson,${line.drop(1)}""".getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     spark.stop()
   }

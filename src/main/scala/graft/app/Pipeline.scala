@@ -120,7 +120,7 @@ final class Pipeline(
     * cache, then the three sink writes at once, each count merge behind its
     * own replay marker in `markerDir`.
     */
-  private[app] def fanOut(batch: DataFrame, batchId: Long,
+  private[graft] def fanOut(batch: DataFrame, batchId: Long,
       markerDir: java.nio.file.Path): Unit = {
     batch.persist()
     try {
@@ -174,25 +174,6 @@ final class Pipeline(
         .select(col("window_start"), col(key), col("count"))
       sink.upsert(acc, key, orderCol = Some("window_start"))
     }
-  }
-
-  /** Batch-mode fan-out over a complete snapshot DataFrame — used by tests
-    * and the oracle tier, where the whole input is one "batch" and windowed
-    * counts over it are exact.
-    */
-  def processBatch(batch: DataFrame): Unit = {
-    batch.persist()
-    try {
-      userAddressSink.upsert(
-        withSnapshotOrder(Projections.userAddressDocument(batch)),
-        "userId", orderCol = Some("snap_order"))
-      stateCountSink.upsert(
-        WindowCounts.countByState(batch, windowLength = windowLength),
-        "state", orderCol = Some("window_start"))
-      countryCountSink.upsert(
-        WindowCounts.countByCountry(batch, windowLength = windowLength),
-        "country", orderCol = Some("window_start"))
-    } finally batch.unpersist()
   }
 }
 

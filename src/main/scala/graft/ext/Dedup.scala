@@ -50,7 +50,7 @@ object Dedup {
     * already accepted for the md5-60 idiom. xxhash64 replaces md5-60
     * (hex string + substring + conv per posting row) with a codegen'd
     * direct-to-long hash — measured −1.3 s at 30× / −3.2 s at 100× on
-    * the q84 candidate chain (tools/NgramVerifyProbe `phases`/`fast`).
+    * the q84 candidate chain (OPTIMIZATION_r17.md, "q84/q92").
     */
   private[graft] def shingleKey(c: Column): Column = xxhash64(c)
 
@@ -315,8 +315,8 @@ object Dedup {
     * q87's sketch build — computed from the parquet inputs every time,
     * nothing cached across runs. On boilerplate-bearing corpora the
     * pass is ~2-3% overhead before the capped path runs unchanged; on
-    * cap-free corpora it unlocks the −33%-at-100× fast form (probe
-    * numbers at `tools/NgramVerifyProbe`).
+    * cap-free corpora it unlocks the −33%-at-100× fast form
+    * (measurements in OPTIMIZATION_r17.md, "q84/q92").
     */
   private[graft] def noHotShingles(docs: DataFrame, shingleN: Int,
       dfCap: Int, textCol: String, idCol: String): Boolean = {
@@ -364,10 +364,7 @@ object Dedup {
       .filter(col("shared") >= minShared)
   }
 
-  /** The verify tail of [[ngramJaccardPairs]] over any candidate block —
-    * factored so the df-attach experiment's alternative generators
-    * ([[ngramCandidatesAgg]]) race through the IDENTICAL downstream.
-    */
+  /** The verify tail of [[ngramJaccardPairs]] over a candidate block. */
   private[graft] def ngramJaccardFrom(cands: DataFrame, sh: DataFrame,
       stats: DataFrame, threshold: Double, idCol: String): DataFrame = {
     // Algebraic pre-filter before the array verify — the verify join was
@@ -407,8 +404,9 @@ object Dedup {
     * 24.1): its three evaluations of the posting lineage re-pay the
     * per-shingle md5 with data volume, while the window's single sort
     * rides the splittable layout's parallelism. The round-15 THIRD arm
-    * (`tools/DfAttachProbe`, [[ngramCandidatesAgg]] with the posting
-    * table localCheckpointed once so the md5 is paid once) closes most
+    * (the aggregate form with the posting table localCheckpointed once
+    * so the md5 is paid once; ARCHITECTURE.md, "The df-attach
+    * experiment, arm three") closes most
     * of the aggregate form's gap but still does not beat the window:
     * q84 26.8/30.7/28.8 s and q92 28.0/29.8/25.0 s at 100×
     * (window/agg/agg_mat; 11.3/15.3/12.4 and 10.1/15.3/12.1 at 30×) —
@@ -459,65 +457,6 @@ object Dedup {
     val stats = withDf.groupBy(col(idCol)).agg(
       count(lit(1)).as("sz"),
       sum(when(col("df") > dfCap, 1L).otherwise(0L)).as("capped"))
-    val cands = posts.select(col("shingle"), col(idCol).as("id1"))
-      .join(posts.select(col("shingle"), col(idCol).as("id2")), Seq("shingle"))
-      .filter(col("id1") < col("id2"))
-      .groupBy(col("id1"), col("id2"))
-      .agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= minShared)
-    (cands, sh, stats)
-  }
-
-  /** EXPERIMENT-ONLY (the df-attach race, `tools/DfAttachProbe`): the
-    * aggregate + anti/semi-join restructure of [[ngramCandidates]] — df
-    * via `groupBy(shingle)` into a hot-shingle keep-out list instead of
-    * the count window, postings via anti-join, per-doc capped counts via
-    * semi-join, `sz` off the shingle array. Emits the IDENTICAL
-    * (cands, sh, stats) triple (same posting stream, same df
-    * semantics — spec-pinned), but evaluates the md5 posting lineage
-    * 3× (hot list, anti-join probe, capped semi-join) where the window
-    * form pays it once — which is why it lost the round-14 race at 100×
-    * despite winning at 30×. `materialize = true` is the round-15 third
-    * arm: localCheckpoint the posting table once so the three reads stop
-    * re-paying the kernel, isolating the sortless shape's true cost.
-    * The production operators stay on the window form; this exists so
-    * the decision at [[ngramCandidates]] keeps a measured alternative.
-    */
-  private[graft] def ngramCandidatesAgg(docs: DataFrame, shingleN: Int,
-      minShared: Int, dfCap: Int, textCol: String, idCol: String,
-      materialize: Boolean): (DataFrame, DataFrame, DataFrame) = {
-    val sh = docs.select(col(idCol),
-      wordShingles(lower(col(textCol)), shingleN).as("sh"))
-    val posts0 = {
-      val p = sh
-        .select(col(idCol), explode(col("sh")).as("shingle"))
-        .withColumn("shingle", shingleKey(col("shingle")))
-      if (materialize) p.localCheckpoint() else p
-    }
-    // hot keep-OUT list: the few shingles with df > cap (bounded by
-    // corpus/dfCap distinct keys — small, broadcastable)
-    val hot = posts0.groupBy(col("shingle"))
-      .agg(count(lit(1)).as("_df"))
-      .filter(col("_df") > dfCap)
-      .select(col("shingle"))
-    val posts = posts0.join(hot, Seq("shingle"), "left_anti")
-    val cappedPerDoc = posts0.join(hot, Seq("shingle"), "left_semi")
-      .groupBy(col(idCol)).agg(count(lit(1)).as("_capped"))
-    // size(sh) > 0: the window form's stats derive from the exploded
-    // posting stream, so a doc whose shingle array is null (null text)
-    // or empty (a shingler without the short-doc fallback) has no
-    // stats row there — match it exactly or the "(cands, sh, stats)
-    // triple is IDENTICAL" contract silently holds a sz=0/null
-    // superset (round-16, ADVICE; spec-pinned by the null-text
-    // fixture case; note empty/whitespace TEXT is not this edge —
-    // wordShingles emits a single short-doc shingle for it, sz = 1 in
-    // both forms)
-    val stats = sh
-      .filter(size(col("sh")) > 0)
-      .select(col(idCol), size(col("sh")).cast("long").as("sz"))
-      .join(cappedPerDoc, Seq(idCol), "left")
-      .select(col(idCol), col("sz"),
-        coalesce(col("_capped"), lit(0L)).as("capped"))
     val cands = posts.select(col("shingle"), col(idCol).as("id1"))
       .join(posts.select(col("shingle"), col(idCol).as("id2")), Seq("shingle"))
       .filter(col("id1") < col("id2"))

@@ -442,8 +442,9 @@ object TextAnalysis {
     // the accepted md5-60 class). h12 hashes the two tokens as separate
     // xxhash64 fields — no concat ambiguity — and every score join and
     // the train aggregates shuffle 8/16-byte longs instead of token
-    // strings: q111 warm 5.8 → 3.8 s at the 30× probe (tools/LmProbe,
-    // exact-equality checked both directions).
+    // strings: q111 warm 5.8 → 3.8 s at the 30× probe, exact equality
+    // checked both directions (OPTIMIZATION_r17.md, "Hashed
+    // engine-internal join keys").
     val bigrams = toks.filter(size(col("t")) >= 2)
       .select(explode(expr(
         "transform(sequence(0, size(t)-2), i -> struct(t[i] AS w1, t[i+1] AS w2))")).as("p"))

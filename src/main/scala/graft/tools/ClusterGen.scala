@@ -55,11 +55,7 @@ object ClusterGen {
     val sigma = args.lift(2).map(_.toDouble).getOrElse(0.09)
     val clusterSize = args.lift(3).map(_.toInt).getOrElse(64)
     val labelMode = args.lift(4).getOrElse("cluster")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(32)
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, dst, n, sigma = sigma, clusterSize = clusterSize,
       labelMode = labelMode)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Dump `explain(formatted)` for every registered query — the plan-audit
   * artifact (pushdown / broadcast / codegen inspection). Dev tool.
@@ -12,12 +11,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("/tmp/plans.txt")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     val audit = new StringBuilder
@@ -62,12 +56,7 @@ object PlanBaseline {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("src/test/resources/plan_baseline.tsv")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       name -> PlanProps.of(fn(spark, dir))

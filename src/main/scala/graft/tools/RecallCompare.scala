@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ext.Similarity
 
@@ -47,7 +46,7 @@ import graft.ext.Similarity
 object RecallCompare {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: RecallCompare <sfDir> [<sfDir> ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(32)
     val nprobes = sys.env.getOrElse("SPARK_GRAFT_NPROBES", "3")
       .split(",").toSeq.map(_.trim).filter(_.nonEmpty).map(_.toInt)
     // an empty list would still pay the full quantizer builds and then
@@ -66,13 +65,7 @@ object RecallCompare {
         fs
       }
     }
-    val spark = ScaleKnobs(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions"))
-      .getOrCreate()
+    val spark = graft.Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     for (dir <- args) {
       val emb = graft.core.Tables.load(spark, dir, "embeddings")

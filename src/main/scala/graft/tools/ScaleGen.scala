@@ -31,11 +31,7 @@ object ScaleGen {
     val dst = args.lift(1).getOrElse("/tmp/sfx")
     val n = args.lift(2).map(_.toInt).getOrElse(10)
     val mode = args.lift(3).getOrElse("full")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(32)
     spark.sparkContext.setLogLevel("WARN")
     mode match {
       case "full" => generate(spark, src, dst, n)

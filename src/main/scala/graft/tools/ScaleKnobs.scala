@@ -2,48 +2,23 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Optional shuffle-width env knobs shared by the Bench/QTime harnesses
-  * (default off — absent envs leave the builder untouched).
-  *
-  * At ≥30× probe scale the fixed reducer width spills on explode-heavy
-  * self-joins, and widening `initialPartitionNum` alone is undone by AQE
-  * coalescing back to the 64m ADVISORY target — which is measured in
-  * compressed wire bytes, ~10× below the in-memory expansion of exploded
-  * postings. Set both together, e.g.
-  * `SPARK_GRAFT_INIT_PARTS=256 SPARK_GRAFT_ADVISORY=8m`.
+/** The session conf that depends on the input's scale. Sessions take it
+  * through [[graft.Sessions.local]].
   */
 object ScaleKnobs {
-  def apply(builder: SparkSession.Builder): SparkSession.Builder = {
-    val b0 = builder.config("spark.sql.codegen.cache.maxEntries",
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-    // codegen class cache (static conf, default 100 entries): a suite of
-    // 161 distinct queries compiles ~1000+ whole-stage/expression codegen
-    // units, so the default cache thrashes and every bench pass re-pays
-    // Janino compilation for almost every stage. 4096 entries holds the
-    // full suite; scale-neutral (any long-lived app with many distinct
-    // plans — a real cluster driver included — wants the same), and
-    // env-overridable for A/B.
-    val b1 = b0.config("spark.sql.extensions",
-      "graft.functions.GraftExtensions")
-    val b2 = sys.env.get("SPARK_GRAFT_INIT_PARTS").fold(b1)(n =>
-      b1.config(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", n))
-    val b3 = sys.env.get("SPARK_GRAFT_ADVISORY").fold(b2)(s =>
-      b2.config("spark.sql.adaptive.advisoryPartitionSizeInBytes", s))
-    // A/B lever: planner broadcast threshold (default 10m)
-    val b3a = sys.env.get("SPARK_GRAFT_AUTOBROADCAST").fold(b3)(s =>
-      b3.config("spark.sql.autoBroadcastJoinThreshold", s))
-    // A/B lever: AQE sort-merge→shuffled-hash conversion threshold
-    // (spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold — off by
-    // default upstream; converts an SMJ to SHJ at runtime when every
-    // build-side partition is below the threshold, skipping both sides'
-    // sorts; guide §3.1)
-    val b4 = sys.env.get("SPARK_GRAFT_SHJ_LOCALMAP").fold(b3a)(s =>
-      b3a.config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", s))
-    // A/B lever for injected optimizer rules (comma-separated rule names)
-    sys.env.get("SPARK_GRAFT_EXCLUDED_RULES").fold(b4)(r =>
-      b4.config("spark.sql.optimizer.excludedRules", r))
-  }
+  /** Codegen class cache (static conf, default 100 entries): a suite of
+    * 161 distinct queries compiles ~1000+ whole-stage/expression codegen
+    * units, so the default cache thrashes and every bench pass re-pays
+    * Janino compilation for almost every stage. 4096 entries holds the
+    * full suite; scale-neutral (any long-lived app with many distinct
+    * plans — a real cluster driver included — wants the same).
+    */
+  val codegenCacheEntries = 4096L
+
+  private def apply(builder: SparkSession.Builder): SparkSession.Builder =
+    builder
+      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries)
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
 
   private def dirBytes(f: java.io.File): Long =
     if (f.isFile) f.length
@@ -63,10 +38,10 @@ object ScaleKnobs {
     * bytes and the explode-heavy posting shuffles expand ~10× in
     * memory, so 8 MB wire ≈ 80 MB in-memory — the optimization guide's
     * recommended partition size — where 64 MB wire re-merged the wide
-    * shuffles AQE was just given room for (the documented
-    * INIT_PARTS/ADVISORY interaction, now the default instead of a
-    * sweep-only env pairing; measured −4.4 s at sf0.1 on its own,
-    * 137/161 queries improving). Both envs still override.
+    * shuffles AQE was just given room for (measured −4.4 s at sf0.1 on
+    * its own, 137/161 queries improving). Widening `initialPartitionNum`
+    * alone is undone by AQE coalescing back to the 64 MB advisory, so the
+    * two are set together.
     */
   def forDir(builder: SparkSession.Builder, dataDir: String,
       cpus: Int): SparkSession.Builder = {

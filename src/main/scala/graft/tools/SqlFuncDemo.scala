@@ -1,16 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Smoke: native expressions through the spark.sql surface, both the
   * runtime registration path and the spark.sql.extensions path.
   */
 object SqlFuncDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(2)
     spark.sparkContext.setLogLevel("WARN")
     // extensions path: functions available with no explicit registration
     val r = spark.sql(

@@ -3,7 +3,6 @@ package graft.tools
 import graft.core.Schemas
 import graft.operators.{EnrichmentJoin, Envelope}
 import graft.sources.{FileIngestSource, FixtureGenerator}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -16,13 +15,7 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft-demo").toString
     FixtureGenerator.writeFiles(dir, seed = 42L)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(4)
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
 

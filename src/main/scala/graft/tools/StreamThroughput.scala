@@ -47,13 +47,7 @@ object StreamThroughput {
       case n :: rest if n.forall(_.isDigit) => ("join", n.toInt)
       case m :: rest => (m, rest.headOption.map(_.toInt).getOrElse(50000))
     }
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(32)
     spark.sparkContext.setLogLevel("WARN")
     // Unload every loaded state-store provider BEFORE the context stops:
     // this closes each RocksDB instance (and disposes its native logger)

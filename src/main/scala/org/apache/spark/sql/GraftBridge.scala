@@ -20,4 +20,15 @@ object GraftBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "built-in")
+
+  /** Block until every event posted so far to the context's listener bus
+    * (SparkListeners and QueryExecutionListeners alike, which are delivered
+    * asynchronously) has been handled. The bus is private[spark].
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  /** The shuffle a map stage writes (None for a result stage). */
+  def shuffleDepId(info: org.apache.spark.scheduler.StageInfo): Option[Int] =
+    info.shuffleDepId
 }

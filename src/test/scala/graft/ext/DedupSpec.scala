@@ -310,58 +310,18 @@ class DedupSpec extends SparkSpecBase {
             s"extra=${gotCont.keySet -- expCont.keySet}")
         gotCont.foreach { case (k, c) => assert(math.abs(c - expCont(k)) < 1e-6) }
       }
-    }
-  }
-
-  test("df-attach aggregate restructure (both arms) is bit-identical to the window form") {
-    // the experiment generators (tools/DfAttachProbe) must emit the same
-    // pairs as production or the race is meaningless — use the tiny-
-    // vocabulary corpus so the df cap binds and the hot keep-out list,
-    // capped semi-join stats, and anti-join postings all carry real rows
-    val rnd = new scala.util.Random(7)
-    val vocab = (0 until 6).map(i => s"w$i")
-    // id 60: NULL text — wordShingles propagates the null, the exploded
-    // posting stream drops it, so the window form emits NO stats row;
-    // the agg form's size(sh) > 0 filter must match (round-16 ADVICE).
-    // ids 61/62: empty/whitespace docs — these DO carry the kernel's
-    // single short-doc shingle (sz = 1 in BOTH forms; pinned so a
-    // future shingler emitting a genuinely empty array trips the
-    // zero-shingle path instead of silently diverging the stats)
-    val corpusDf = ((0L until 60L).map { id =>
-      val len = 6 + rnd.nextInt(14)
-      (id, Seq.fill(len)(vocab(rnd.nextInt(vocab.length))).mkString(" "))
-    } ++ Seq((60L, null.asInstanceOf[String]), (61L, ""), (62L, "  \t ")))
-      .toDF("doc_id", "text")
-    for ((dfCap, minShared, t) <- Seq((3, 1, 0.3), (5, 2, 0.5))) {
-      val baseStats = Dedup.ngramCandidates(corpusDf, 3, minShared,
-        dfCap, "text", "doc_id")._3.collect().map(_.toSeq).toSet
-      assert(!baseStats.exists(_.head == 60L),
-        "window-form stats must omit the null-text doc")
-      assert(baseStats.exists(r => r.head == 61L && r(1) == 1L) &&
-        baseStats.exists(r => r.head == 62L && r(1) == 1L),
+      // the candidate generator's per-doc stats on the edge docs: id 60 has
+      // NULL text, which wordShingles propagates and the exploded posting
+      // stream drops, so it has NO stats row; ids 61/62 (empty/whitespace)
+      // carry the kernel's single short-doc shingle, sz = 1
+      val edgeDf = (corpus ++ Seq((60L, null.asInstanceOf[String]), (61L, ""),
+        (62L, "  \t "))).toDF("doc_id", "text")
+      val stats = Dedup.ngramCandidates(edgeDf, 3, minShared, dfCap, "text", "doc_id")
+        ._3.collect().map(_.toSeq).toSet
+      assert(!stats.exists(_.head == 60L), "stats must omit the null-text doc")
+      assert(stats.exists(r => r.head == 61L && r(1) == 1L) &&
+        stats.exists(r => r.head == 62L && r(1) == 1L),
         "short docs carry the kernel's single short-doc shingle")
-      for (mat <- Seq(false, true)) {
-        val aggStats = Dedup.ngramCandidatesAgg(corpusDf, 3, minShared,
-          dfCap, "text", "doc_id", materialize = mat)._3
-          .collect().map(_.toSeq).toSet
-        assert(aggStats == baseStats,
-          s"stats frames diverged: mat=$mat dfCap=$dfCap " +
-            s"missing=${baseStats -- aggStats} extra=${aggStats -- baseStats}")
-      }
-      val base = Dedup.ngramJaccardPairs(corpusDf, t, 3, minShared, dfCap)
-        .collect().map(_.toSeq).toSet
-      val baseCont = Dedup.containmentPairs(corpusDf, t, 3, minShared, dfCap)
-        .collect().map(_.toSeq).toSet
-      for (mat <- Seq(false, true)) {
-        val (c, sh, st) = Dedup.ngramCandidatesAgg(corpusDf, 3, minShared,
-          dfCap, "text", "doc_id", materialize = mat)
-        assert(Dedup.ngramJaccardFrom(c, sh, st, t, "doc_id")
-          .collect().map(_.toSeq).toSet == base,
-          s"jaccard diverged: mat=$mat dfCap=$dfCap")
-        assert(Dedup.containmentFrom(c, sh, st, t, "doc_id")
-          .collect().map(_.toSeq).toSet == baseCont,
-          s"containment diverged: mat=$mat dfCap=$dfCap")
-      }
     }
   }
 

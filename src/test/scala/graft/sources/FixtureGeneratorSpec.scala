@@ -7,9 +7,9 @@ import graft.sinks.InMemoryDocumentSink
 import org.apache.spark.sql.functions._
 
 /** G1 + golden end-to-end: the seeded generator writes the reference
-  * producer's exact wire shapes (FIXTURES.md §1-2); the batch pipeline over
-  * those files must converge to the complete per-user address lists and
-  * the expected over-counted window totals.
+  * producer's exact wire shapes (FIXTURES.md §1-2); the pipeline's
+  * per-batch fan-out over those files must converge to the complete
+  * per-user address lists and the expected over-counted window totals.
   */
 class FixtureGeneratorSpec extends SparkSpecBase {
 
@@ -28,6 +28,7 @@ class FixtureGeneratorSpec extends SparkSpecBase {
 
   test("golden run: file source -> batch pipeline -> sink convergence") {
     val dir = java.nio.file.Files.createTempDirectory("graft-fixtures").toString
+    val markers = java.nio.file.Files.createTempDirectory("graft-fixture-markers")
     val fs = FixtureGenerator.writeFiles(dir, seed = 42L)
     val source = new FileIngestSource(dir, streaming = false)
     val uaSink = new InMemoryDocumentSink
@@ -35,11 +36,12 @@ class FixtureGeneratorSpec extends SparkSpecBase {
     val coSink = new InMemoryDocumentSink
     val pipeline = new Pipeline(source, uaSink, stSink, coSink,
       procTimeExpr = lit("2026-01-01 10:00:30").cast("timestamp"))
-    // batch replay: J1 in deterministic batch mode over the parsed files
+    // batch replay: J1 in deterministic batch mode over the parsed files,
+    // fanned out as one micro-batch of the streaming topology
     val envelopes = pipeline.envelopes(spark)
     val snapshots = graft.operators.EnrichmentJoin.joinBatch(spark, envelopes).toDF()
       .withColumn("procTime", lit("2026-01-01 10:00:30").cast("timestamp"))
-    pipeline.processBatch(snapshots)
+    pipeline.fanOut(snapshots, 0L, markers)
 
     // S3 golden: one doc per user, full 3-address list
     assert(uaSink.size == 10)
